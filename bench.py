@@ -348,16 +348,25 @@ def emit(
     # canonical summary with non-comparable low-core numbers). A run
     # with SPARK_GRAFT_CPUS set below the hardware width still prints
     # both JSON lines (the probe's own artifact); it just doesn't
-    # replace the canonical file. --no-summary opts any run out.
+    # replace the canonical file. --no-summary opts any run out. A
+    # skipped write says why on stderr.
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    non_default_cores = cpus_env is not None and cpus_env != str(os.cpu_count())
-    if full_run and not no_summary and not non_default_cores:
-        summary_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "bench_summary.json"
-        )
-        with open(summary_path, "w") as fh:
-            json.dump(payload, fh, indent=1, sort_keys=True)
-            fh.write("\n")
+    skip = None
+    if not full_run:
+        skip = "a --queries subset run"
+    elif no_summary:
+        skip = "--no-summary"
+    elif cpus_env is not None and cpus_env != str(os.cpu_count()):
+        skip = f"SPARK_GRAFT_CPUS={cpus_env}, not this machine's {os.cpu_count()} cores"
+    if skip:
+        print(f"bench_summary.json not written: {skip}", file=sys.stderr)
+        return
+    summary_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "bench_summary.json"
+    )
+    with open(summary_path, "w") as fh:
+        json.dump(payload, fh, indent=1, sort_keys=True)
+        fh.write("\n")
 
 
 if __name__ == "__main__":

@@ -168,7 +168,7 @@ def pagerank_auto(
     n = len(nodes)
     spark = edges.sparkSession
     if n == 0:
-        return spark.createDataFrame([], "node long, rank_e12 long")
+        return local_rows(spark, [], "node long, rank_e12 long")
     deg: dict = {}
     for s in srcs:
         deg[s] = deg.get(s, 0) + 1

@@ -21,35 +21,52 @@ the deduped dim — same output schema, no O(n²) risk, and the 100 TB
 fact table is touched exactly once with zero shuffle (both joins are
 broadcasts). ``enrich_trips(literal_self_join=True)`` reproduces the
 reference's literal two-branch self-join for parity testing.
+
+Steps 1-2 run on the driver (:func:`dedup_zones`, a few hundred rows
+the step-3 broadcasts ship from the driver anyway), so no stage of the
+day starts a Python worker.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from taxi_trips_etl_spark.functions.geo import wkt_centroid_to_cell_udf
+from taxi_trips_etl_spark.functions.geo import centroid_cell
 from taxi_trips_etl_spark.functions.scalar import daypart
+from taxi_trips_etl_spark.sources.localrel import local_rows
 
 
 def dedup_zones(zones: DataFrame, res: int = 9) -> DataFrame:
     """W1+P5: rank-dedup the zone dim, then index centroids to hex cells.
 
-    ``byte_length(ST_ASTEXT(geom))`` → ``F.octet_length`` on the WKT
-    string (F4/F5: geometry is stored as WKT, so ST_ASTEXT is identity).
-    The centroid→cell UDF runs on the ~hundreds-row deduped dim only.
+    Driver-side over the collected dim; returns a local relation of
+    ``(zone_id, hex_cell)`` holding exactly the rows ``RANK() OVER
+    (PARTITION BY zone_id ORDER BY octet_length(zone_geom) DESC) = 1``
+    keeps: all ties at the longest UTF-8 WKT (they fan out the left
+    join, as in the reference), NULL geometries only in a zone with no
+    other (NULLS LAST), NULL zone_id as its own partition. F4/F5:
+    geometry is stored as WKT, so ST_ASTEXT is identity.
     """
-    w = Window.partitionBy("zone_id").orderBy(
-        F.octet_length(F.col("zone_geom")).desc()
+    # A NULL geometry sizes as -1: it ranks below any WKT, and ties
+    # only with other NULLs.
+    sized = [
+        (zone_id, geom, -1 if geom is None else len(geom.encode("utf-8")))
+        for zone_id, geom in zones.select("zone_id", "zone_geom").collect()
+    ]
+    longest: dict = {}
+    for zone_id, _, n in sized:
+        longest[zone_id] = max(n, longest.get(zone_id, n))
+    kept = [
+        (zone_id, centroid_cell(geom, res))
+        for zone_id, geom, n in sized
+        if n == longest[zone_id]
+    ]
+    schema = StructType(
+        [zones.schema["zone_id"], StructField("hex_cell", StringType())]
     )
-    deduped = (
-        zones.withColumn("finish_rank", F.rank().over(w))
-        .filter(F.col("finish_rank") == 1)
-        .drop("finish_rank")
-    )
-    return deduped.withColumn(
-        "hex_cell", wkt_centroid_to_cell_udf(res)(F.col("zone_geom"))
-    ).select("zone_id", "hex_cell")
+    return local_rows(zones.sparkSession, kept, schema)
 
 
 def enrich_trips(

@@ -49,14 +49,13 @@ def _drop(path: str) -> None:
 def storage_to_bq(spark: SparkSession, sf_dir: str, work_dir: str, **_: object) -> bool:
     """Stage 1 (ShortCircuit semantics, taxi_trips_etl.py:199-207):
     load the day's input into the staging table; False skips the DAG."""
+    from taxi_trips_etl_spark.sources.readers import parquet_num_rows
     from taxi_trips_etl_spark.sources.taxi_testdata import trips_from_lineitem
 
     path = f"{sf_dir}/lineitem.parquet"
-    if not os.path.exists(path):
+    if not os.path.exists(path) or parquet_num_rows(path) == 0:
         return False
     li = spark.read.parquet(path)
-    if li.isEmpty():
-        return False
     trips_from_lineitem(li).write.mode("overwrite").parquet(
         _stage_dir(work_dir, "temp_trips")
     )

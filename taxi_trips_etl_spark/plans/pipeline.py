@@ -112,6 +112,7 @@ def run_taxi_pipeline(
         most_populars,
         normalize_trips,
     )
+    from taxi_trips_etl_spark.sources.readers import parquet_num_rows
     from taxi_trips_etl_spark.sources.taxi_testdata import (
         trips_from_lineitem,
         zone_dim,
@@ -125,8 +126,10 @@ def run_taxi_pipeline(
         if not os.path.exists(path):
             log.info("no input at %s → short-circuit", path)
             return None
-        li = spark.read.parquet(path)
-        return trips_from_lineitem(li) if not li.isEmpty() else None
+        if parquet_num_rows(path) == 0:
+            log.info("zero rows at %s → short-circuit", path)
+            return None
+        return trips_from_lineitem(spark.read.parquet(path))
 
     def normalize(ctx: dict[str, Any]):
         return normalize_trips(ctx["load"])

@@ -1499,10 +1499,10 @@ def q_recursive_cte_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_udtf_split_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (Spark 4 table function) + LATERAL join: one input
-    row → N output rows, the table-function analogue of the two scalar
-    UDFs. UDTFs are Python-slow-path, so this belongs on *document*
+    row → N output rows, the table-function analogue of a scalar
+    UDF. UDTFs are Python-slow-path, so this belongs on *document*
     grain (the row-multiplying parse), never on the fact table — the
-    same placement rule as the geo UDFs. The pytest covers multi-
+    same placement rule as the geo functions. The pytest covers multi-
     sentence splitting; this table is single-sentence so the oracle
     pins the pass-through shape."""
     from pyspark.sql.functions import udtf

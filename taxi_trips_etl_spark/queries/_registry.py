@@ -497,6 +497,15 @@ _REVERIFY: frozenset[str] = frozenset({
     # Batch 6 — bfs/sssp relaxations: batch-1 + counted hints + counted
     # width under static_rounds:
     "graph_bfs_hops", "graph_shortest_paths",
+    # local_rows frames became JVM LocalRelations and dedup_zones runs
+    # on the driver (results bit-identical, plans changed); the other
+    # callers of either (bpe, bfs, sssp) already front above:
+    "compact_small_files_audit", "corpus_prepare_v2", "dedup_canonicalize",
+    "dedup_components", "embedding_canonicalize", "flagship_known_zones",
+    "flagship_most_populars", "graph_pagerank", "hex_neighbor_smoothing",
+    "mmr_diversify_rerank", "observed_scan_metrics", "pack_sequences",
+    "packing_fragmentation_audit", "streaming_dedup_watermark",
+    "streaming_dq_monitor", "streaming_ingest_dedup",
 })
 _mark_verified(3, _R3_VERIFIED)
 _mark_verified(2, _R2_VERIFIED)

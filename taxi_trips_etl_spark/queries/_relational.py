@@ -235,7 +235,7 @@ def _populars_flat(cells: DataFrame) -> DataFrame:
 def q_most_populars_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2 + W2 + T1 + J4: the full final-result shape
     (taxi_trips_etl.py:164-176) with location-derived cells so DuckDB
-    can oracle it (the geo-UDF variant is ``flagship_most_populars``)."""
+    can oracle it (the geo variant is ``flagship_most_populars``)."""
     cells = _norm_trips(spark, sf_dir).select(
         F.concat(F.lit("z"), F.col("pickup_location_id").cast("string")).alias(
             "pickup_cell"
@@ -250,7 +250,7 @@ def q_most_populars_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zone_hex_values_sql() -> str:
     """The synthetic zone dim's zone_id → hex-cell mapping as a SQL
     VALUES list, computed at import time with the same pure-Python
-    centroid→cell function the enrichment UDF wraps.
+    centroid→cell function the enrichment applies (dedup_zones).
 
     Rank-dedup semantics baked in: zones with a duplicate geometry
     (z % 5 == 0) keep the LONGER octagon WKT (enrichment_query.py:12-14

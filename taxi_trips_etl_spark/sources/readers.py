@@ -62,6 +62,19 @@ _UTC_EQUIVALENT_ZONES = frozenset(
 )
 
 
+def parquet_num_rows(path: str) -> int:
+    """Row count of a parquet file or dataset directory, read from the
+    footers alone: no data pages, no Spark job (the O2 empty-input gate,
+    taxi_trips_etl.py:84-85)."""
+    if os.path.isdir(path):
+        import pyarrow.dataset as ds
+
+        return ds.dataset(path, format="parquet").count_rows()
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
+
+
 def require_utc_session(spark, what: str = "event-time readers") -> None:
     """Raise unless the session timezone is (an alias of) UTC.
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 N_ZONES = 48
 
@@ -97,4 +98,8 @@ def zone_dim(spark: SparkSession, n_zones: int = N_ZONES) -> DataFrame:
             rows.append((z, _zone_wkt(z, detailed=True)))
     from taxi_trips_etl_spark.sources.localrel import local_rows
 
-    return local_rows(spark, rows, "zone_id long, zone_geom string")
+    # Not DDL: that would be the day's only SQL-parser use (~0.3 s cold).
+    schema = StructType(
+        [StructField("zone_id", LongType()), StructField("zone_geom", StringType())]
+    )
+    return local_rows(spark, rows, schema)

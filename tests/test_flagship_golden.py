@@ -1,6 +1,6 @@
 """Golden regression pin for the flagship pipeline at sf0.001.
 
-The driver's rows-only check can't see value drift in the geo-UDF
+The driver's rows-only check can't see value drift in the geo
 path (hex cells aren't SQL-expressible); this pins the exact output so
 any accidental change to centroid math, hex indexing, daypart handling,
 normalization, or rank-tie semantics fails loudly. Regenerate the

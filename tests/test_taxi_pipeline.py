@@ -175,3 +175,123 @@ def test_pipeline_single_fact_pass(spark, sf_dir):
     assert "ExistingRDD" in plan
     assert "lineitem.parquet" not in plan
     assert "InMemoryRelation" not in plan
+
+
+# Zone dim exercising every corner of RANK() = 1 over octet_length DESC.
+_SQ = "POLYGON(({x} {y}, {x1} {y}, {x1} {y1}, {x} {y1}, {x} {y}))"
+
+
+def _square(x, y, s=1):
+    return _SQ.format(x=x, y=y, x1=x + s, y1=y + s)
+
+
+RANK_ZONES = [
+    # 1: longest WKT wins (octagon over square).
+    (1, ZONES[0][1]),
+    (1, ZONES[1][1]),
+    # 3: two different geometries tied at the max byte length → both
+    # kept, so the downstream left join fans out as RANK() = 1 does.
+    (3, _square(20, 20)),
+    (3, _square(30, 30)),
+    # 4: a NULL geometry loses to any WKT (DESC sorts NULLS LAST).
+    (4, None),
+    (4, _square(40, 40)),
+    # 5: only NULL geometries → all tie at rank 1, hex_cell NULL.
+    (5, None),
+    # 6: byte length, not character length: the multibyte WKT has fewer
+    # characters but more bytes, so it wins.
+    (6, _square(50, 50) + "ééé"),
+    (6, _square(60, 60, 3) + "xxxx"),
+    # NULL zone_id is its own partition.
+    (None, _square(70, 70)),
+    (None, _square(80, 80, 2) + "  "),
+]
+
+
+def test_driver_dedup_zones_matches_window_rank(spark):
+    from pyspark.sql import Window
+
+    from taxi_trips_etl_spark.functions.geo import centroid_cell
+
+    zones = spark.createDataFrame(RANK_ZONES, "zone_id long, zone_geom string")
+    w = Window.partitionBy("zone_id").orderBy(
+        F.octet_length(F.col("zone_geom")).desc()
+    )
+    ranked = (
+        zones.withColumn("finish_rank", F.rank().over(w))
+        .filter(F.col("finish_rank") == 1)
+        .collect()
+    )
+    want = sorted(
+        ((r.zone_id, centroid_cell(r.zone_geom)) for r in ranked),
+        key=repr,
+    )
+    out = dedup_zones(zones)
+    got = sorted(((r.zone_id, r.hex_cell) for r in out.collect()), key=repr)
+    assert got == want
+    assert out.schema.simpleString() == "struct<zone_id:bigint,hex_cell:string>"
+    by_zone = {}
+    for z, cell in got:
+        by_zone.setdefault(z, []).append(cell)
+    assert len(by_zone[3]) == 2 and len(set(by_zone[3])) == 2
+    assert by_zone[4] == [centroid_cell(_square(40, 40))]
+    assert by_zone[5] == [None]
+    assert by_zone[6] == [centroid_cell(_square(50, 50))]
+    assert by_zone[None] == [centroid_cell(_square(80, 80, 2))]
+
+
+def test_flagship_day_runs_no_python_eval(spark, sf_dir, monkeypatch):
+    """The enriched frame the popularity stage consumes (the part of
+    the day the route-count checkpoint hides from the final plan) and
+    the final plan both run without any Python-eval node; the zone dim
+    arrives as a JVM local relation."""
+    import re
+
+    import taxi_trips_etl_spark.operators as ops
+
+    plans = {}
+    real = ops.most_populars
+
+    def spy(enriched, **kw):
+        plans["enriched"] = (
+            enriched._jdf.queryExecution().executedPlan().toString()
+        )
+        return real(enriched, **kw)
+
+    monkeypatch.setattr(ops, "most_populars", spy)
+    df = run_taxi_pipeline(spark, sf_dir)
+    plans["final"] = df._jdf.queryExecution().executedPlan().toString()
+    py_eval = re.compile(
+        r"BatchEvalPython|ArrowEvalPython|InPandas|InArrow|PythonUDTF"
+    )
+    for name, plan in plans.items():
+        assert not py_eval.search(plan), (name, plan)
+    assert "LocalTableScan" in plans["enriched"], plans["enriched"]
+    assert "ExistingRDD" not in plans["enriched"], plans["enriched"]
+
+
+def test_pipeline_short_circuits_on_zero_row_input(spark, sf_dir, tmp_path):
+    """O2 on an input that exists but holds no rows: both a single
+    parquet file and a Spark-written dataset directory short-circuit
+    from the footer row count, and no partition is written (the Airflow
+    shim's first stage shares the gate)."""
+    import pyarrow.parquet as pq
+
+    from taxi_trips_etl_spark.plans.airflow_dag import storage_to_bq
+
+    empty = pq.read_table(f"{sf_dir}/lineitem.parquet").slice(0, 0)
+    file_dir = tmp_path / "as_file"
+    file_dir.mkdir()
+    pq.write_table(empty, str(file_dir / "lineitem.parquet"))
+    dir_dir = tmp_path / "as_dir"
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(0).write.parquet(
+        str(dir_dir / "lineitem.parquet")
+    )
+    for day_dir in (file_dir, dir_dir):
+        out_dir = tmp_path / f"out_{day_dir.name}"
+        out = run_taxi_pipeline(spark, str(day_dir), str(out_dir), "2026-01-01")
+        assert out is None
+        assert not out_dir.exists()
+        work = tmp_path / f"work_{day_dir.name}"
+        assert storage_to_bq(spark, sf_dir=str(day_dir), work_dir=str(work)) is False
+        assert not work.exists()
